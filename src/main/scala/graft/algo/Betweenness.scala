@@ -4,16 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Source-sampled betweenness centrality (Brandes 2001) as level-synchronous
-  * DataFrame passes — the sampled-centrality companion to
-  * [[Bfs.multiSourceDistances]] (lodcc exposes centrality-family measures
-  * per dataset, `graph/measures/` — betweenness is the standard one its
-  * graph-tool backend offers that the engine lacked).
+  * DataFrame passes (lodcc exposes centrality-family measures per dataset,
+  * `graph/measures/` — betweenness is the standard one its graph-tool
+  * backend offers that the engine lacked).
   *
-  * Forward pass: one multi-source BFS fixpoint keyed (seed, vertex) where
-  * each frontier row carries sigma = #shortest paths from its seed — the
-  * level join aggregates predecessor sigmas map-side before the exchange,
-  * so k seeds cost max-eccentricity rounds total, shuffle volume bounded by
-  * the per-level DAG fan-out (never |V|^2).
+  * Forward pass: [[Bfs.levels]], whose frontier carries sigma = #shortest
+  * paths from its seed.
   *
   * Backward pass: Brandes' dependency accumulation by DESCENDING level.
   * Every shortest-path predecessor of a dist-d vertex sits at dist d-1, so
@@ -26,58 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object Betweenness {
 
-  /** Forward sigma pass: (seed, vertex, dist, sigma) over distinct directed
-    * edges; sigma = #shortest seed->vertex paths (double: parity with the
-    * oracle's division, and counts exceed Long on dense DAGs long before
-    * they lose integer precision in a double).
+  /** Sampled betweenness from `seeds` over an adjacency from
+    * [[Bfs.prepareAdj]]: (vertex, betweenness, n_seeds) where betweenness =
+    * sum over seeds of Brandes' delta and n_seeds = #seeds whose BFS tree
+    * assigns the vertex a positive dependency. No seeds, no rows.
     */
-  def sigmaForward(dedupedEdges: DataFrame, seeds: Seq[String]): DataFrame = {
-    val spark = dedupedEdges.sparkSession
-    import spark.implicits._
-    var visited = seeds.map(s => (s, s, 0L, 1.0))
-      .toDF("seed", "vertex", "dist", "sigma").localCheckpoint(true)
-    var frontier = visited.select("seed", "vertex", "sigma")
-    var level = 0L
-    var frontierCount = seeds.size.toLong
-    while (frontierCount > 0) {
-      level += 1
-      val next = dedupedEdges
-        .join(frontier, dedupedEdges("src") === frontier("vertex"))
-        .groupBy(col("seed"), col("dst"))
-        .agg(sum("sigma").as("sigma"))
-        .withColumnRenamed("dst", "vertex")
-        .join(visited.select("seed", "vertex"), Seq("seed", "vertex"), "left_anti")
-        .localCheckpoint(false) // lazy: the count below materializes it
-      frontierCount = next.count()
-      if (frontierCount > 0) {
-        visited = visited
-          .union(next.select(col("seed"), col("vertex"), lit(level).as("dist"),
-            col("sigma")))
-          .localCheckpoint(false)
-        frontier = next.select("seed", "vertex", "sigma")
-      }
-    }
-    visited
-  }
-
-  /** Sampled betweenness from `seeds`: (vertex, betweenness, n_seeds)
-    * where betweenness = sum over seeds of Brandes' delta and n_seeds =
-    * #seeds whose BFS tree assigns the vertex a positive dependency.
-    */
-  def run(edges: DataFrame, seeds: Seq[String],
-          assumeDistinct: Boolean = false): DataFrame = {
-    // eager row-format checkpoints instead of columnar persists: the sigma
-    // loop and the DAG build re-read these frames every level, and the
-    // checkpoint read is a plain cached-block scan at the AQE-coalesced
-    // partitioning; `assumeDistinct` skips re-deduplicating an edge set the
-    // caller already deduplicated (dedup here is a perf guard, not a
-    // semantic step — sigma counts are over the distinct edge set either
-    // way, which is why mis-declaring would matter: only callers that KNOW
-    // the set is distinct pass true)
-    val sel = edges.select("src", "dst")
-    val de = (if (assumeDistinct) sel else sel.distinct()).localCheckpoint(true)
-    val vis = sigmaForward(de, seeds).localCheckpoint(true)
-    val maxD = vis.agg(max("dist")).head().getLong(0)
+  def run(adj: DataFrame, seeds: Seq[String]): DataFrame = {
+    // eager: the DAG build and every backward level re-read it
+    val vis = Bfs.levels(adj, seeds).localCheckpoint(true)
+    // 0 when `vis` is empty (no seeds): the backward loop then never runs
+    val maxD = vis.agg(coalesce(max("dist"), lit(0L))).head().getLong(0)
 
     // shortest-path DAG edges per seed: (seed, v, w) with dist(w)=dist(v)+1;
     // explicit plan aliases — both sides derive from `vis`, so bare column
@@ -86,14 +40,14 @@ object Betweenness {
       col("dist").as("dv"), col("sigma").as("sigma_v")).as("l")
     val dw = vis.select(col("seed"), col("vertex").as("w"),
       col("dist").as("dw"), col("sigma").as("sigma_w")).as("r")
-    val dag = de.join(dv, de("src") === col("l.v"))
-      .join(dw, col("r.seed") === col("l.seed") && de("dst") === col("r.w") &&
+    val dag = adj.join(dv, adj("src") === col("l.v"))
+      .join(dw, col("r.seed") === col("l.seed") && adj("dst") === col("r.w") &&
         col("r.dw") === col("l.dv") + 1)
       .select(col("l.seed"), col("v"), col("w"), col("sigma_v"), col("sigma_w"),
         col("dw"))
       .localCheckpoint(true) // pin the DAG once; the level loop reuses it maxD times
 
-    val spark = edges.sparkSession
+    val spark = adj.sparkSession
     import spark.implicits._
     var delta = Seq.empty[(String, String, Double)]
       .toDF("seed", "vertex", "delta")

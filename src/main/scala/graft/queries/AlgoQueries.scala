@@ -310,7 +310,8 @@ object AlgoQueries {
         .orderBy("rank")),
 
     "kg_bfs" -> ((s, dir) =>
-      Bfs.distances(smallEdges(s, dir), "c1").orderBy("vertex")),
+      Bfs.levels(Bfs.prepareAdj(smallEdges(s, dir)), Seq("c1"))
+        .select("vertex", "dist").orderBy("vertex")),
 
     "kg_bgp" -> ((s, dir) => {
       // BGP: ?a -p1-> ?b -p2-> ?c, ?a -p3-> ?c (triangle template, J1).

@@ -44,15 +44,8 @@ object AnalyticsQueries {
     // ties to the greatest vertex), ONE multi-source BFS fixpoint —
     // closeness(s) = reached / sum of BFS distances from s
     "kg_closeness" -> ((s, dir) => {
-      // ONE dedup of the edge set, checkpointed: the seed scan reads the
-      // cached blocks and the BFS skips its own re-dedup (assumeDistinct)
-      val e = liEdges(s, dir).select("src", "dst").distinct()
-        .localCheckpoint(true)
-      val seeds = e.groupBy("src").agg(count(lit(1)).as("od"))
-        .orderBy(col("od").desc, col("src").desc).limit(4)
-        .collect().map(_.getString(0)).toSeq // O(k) driver rows
-      val d = Bfs.multiSourceDistances(e, seeds, assumeDistinct = true)
-      d.where(col("dist") > 0)
+      val adj = Bfs.prepareAdj(liEdges(s, dir))
+      Bfs.levels(adj, Bfs.topOutDegree(adj, 4)).where(col("dist") > 0)
         .groupBy(col("seed"))
         .agg(count(lit(1)).cast("bigint").as("n_reached"),
           sum("dist").cast("bigint").as("total_dist"),
@@ -63,12 +56,8 @@ object AnalyticsQueries {
     // + per-level backward dependency accumulation — all DataFrame joins,
     // maxDist (~3) rounds each way
     "kg_betweenness" -> ((s, dir) => {
-      val e = liEdges(s, dir).select("src", "dst").distinct()
-        .localCheckpoint(true)
-      val seeds = e.groupBy("src").agg(count(lit(1)).as("od"))
-        .orderBy(col("od").desc, col("src").desc).limit(3)
-        .collect().map(_.getString(0)).toSeq // O(k) driver rows
-      Betweenness.run(e, seeds, assumeDistinct = true)
+      val adj = Bfs.prepareAdj(liEdges(s, dir))
+      Betweenness.run(adj, Bfs.topOutDegree(adj, 3))
     }),
 
     // BM25 scoring of the whole corpus against a fixed 3-term query; the

@@ -99,13 +99,8 @@ object MoreQueries {
     // harmonic(v) = sum over seeds s of 1/d(s, v), d > 0
     "kg_harmonic" -> ((s, dir) => {
       import graft.algo.Bfs
-      val e = liEdges(s, dir).select("src", "dst").distinct()
-        .localCheckpoint(true)
-      val seeds = e.groupBy("src").agg(count(lit(1)).as("od"))
-        .orderBy(col("od").desc, col("src").desc).limit(4)
-        .collect().map(_.getString(0)).toSeq // O(k) driver rows
-      val d = Bfs.multiSourceDistances(e, seeds, assumeDistinct = true)
-      d.where(col("dist") > 0)
+      val adj = Bfs.prepareAdj(liEdges(s, dir))
+      Bfs.levels(adj, Bfs.topOutDegree(adj, 4)).where(col("dist") > 0)
         .groupBy("vertex")
         .agg(round(sum(lit(1.0) / col("dist")), 6).as("harmonic"),
           count(lit(1)).cast("bigint").as("n_seeds_reaching"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.algo.{Betweenness, TransitiveClosure}
+import graft.algo.{Betweenness, Bfs, TransitiveClosure}
 import graft.ops.{EventOps, TextOps}
 
 class AnalyticsSpec extends AnyFunSuite {
@@ -38,6 +38,15 @@ class AnalyticsSpec extends AnyFunSuite {
     val bc = Betweenness.run(e, Seq("a")).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(bc == Map("b" -> 1.0, "c" -> 1.0, "d" -> 1.0))
+  }
+
+  test("betweenness: an empty edge table picks no seeds and yields no rows") {
+    val adj = Bfs.prepareAdj(Seq.empty[(String, String)].toDF("src", "dst"))
+    val seeds = Bfs.topOutDegree(adj, 3)
+    assert(seeds.isEmpty)
+    val bc = Betweenness.run(adj, seeds)
+    assert(bc.columns.toSeq == Seq("vertex", "betweenness", "n_seeds"))
+    assert(bc.collect().isEmpty)
   }
 
   test("transitive closure: min dist honors the shortcut") {

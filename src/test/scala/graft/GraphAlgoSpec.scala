@@ -467,19 +467,39 @@ class GraphAlgoSpec extends AnyFunSuite {
     }
   }
 
-  test("multiSourceDistances: one fixpoint == per-seed Bfs.distances; unreached absent") {
-    // directed chain a->b->c->d plus a disconnected e->f
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("e", "f"))
-      .toDF("src", "dst")
-    val seeds = Seq("a", "e", "c")
-    val multi = Bfs.multiSourceDistances(edges, seeds)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    seeds.foreach { s =>
-      val single = Bfs.distances(edges, s)
-        .collect().map(r => (s, r.getString(0)) -> r.getLong(1)).toMap
-      assert(multi.filter(_._1._1 == s) == single, s"seed $s")
+  test("Bfs.levels: dist and sigma == driver-side BFS on a seeded random multigraph") {
+    // random edges with repeats, plus a self-loop on seed v1, a 3-cycle
+    // entered from v3, and u0 -> v5, u1 -> u2: the u's are unreachable
+    // from the rest
+    val rng = new scala.util.Random(7)
+    val random = Seq.fill(120)((s"v${rng.nextInt(40)}", s"v${rng.nextInt(40)}"))
+    val edgeList = random ++ random.take(20) ++ Seq(("v1", "v1"), ("v3", "c0"),
+      ("c0", "c1"), ("c1", "c2"), ("c2", "c0"), ("u0", "v5"), ("u1", "u2"))
+    val out = edgeList.distinct.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    // (dist, sigma) per reached vertex; sigma counts paths over distinct edges
+    def driverBfs(seed: String): Map[String, (Long, Double)] = {
+      var reached = Map(seed -> ((0L, 1.0)))
+      var frontier = Seq(seed)
+      var d = 0L
+      while (frontier.nonEmpty) {
+        d += 1
+        val next = scala.collection.mutable.Map.empty[String, Double]
+        for (v <- frontier; w <- out.getOrElse(v, Nil) if !reached.contains(w))
+          next(w) = next.getOrElse(w, 0.0) + reached(v)._2
+        reached ++= next.map { case (w, sigma) => w -> ((d, sigma)) }
+        frontier = next.keys.toSeq
+      }
+      reached
     }
-    assert(multi(("a", "d")) == 3L && multi(("e", "f")) == 1L && multi(("c", "c")) == 0L)
-    assert(!multi.contains(("e", "a"))) // unreached pairs are absent, not infinite
+    val seeds = Seq("v0", "v1", "v7", "c1", "u0", "u2")
+    val got = Bfs.levels(Bfs.prepareAdj(edgeList.toDF("src", "dst")), seeds).collect()
+      .groupBy(_.getString(0)).map { case (s, rows) =>
+        s -> rows.map(r => r.getString(1) -> ((r.getLong(2), r.getDouble(3)))).toMap
+      }
+    seeds.foreach(s => assert(got(s) == driverBfs(s), s"seed $s"))
+    assert(edgeList.size > edgeList.distinct.size && out("v1").contains("v1"))
+    assert(got("u2") == Map("u2" -> ((0L, 1.0)))) // a sink reaches only itself
+    assert(!got("v0").contains("u0")) // unreached pairs are absent, not infinite
+    assert(got.values.exists(_.values.exists(_._2 > 1.0))) // some sigma > 1
   }
 }
